@@ -1,16 +1,19 @@
-"""Benchmark harness — headline dedup queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness — the shipped ``run_pipeline`` on the bench corpus.
 
 Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...per-stage sec...}, "sf": ..., "docs_per_sec": ...}
+  {"metric": "...", "value": <pipeline sec>, "unit": "sec",
+   "queries": {...per-stage sec...}, "sf": ..., "n_docs": ...,
+   "n_clusters": ..., "cluster_fp": ..., "docs_per_sec": ...,
+   "cores": ..., "_meta": {"git_sha": ...}}
 
-The dedup engine's real work unit is documents, and the driver's
-documents table is small (5k rows at sf0.1), so the bench corpus is a
-deterministic in-Spark expansion of that table (exact copies + seeded
+The corpus is a deterministic in-Spark expansion of
+$SPARK_GRAFT_SF_DIR's documents table (exact copies + seeded
 near-variants; image_dedup_spark.corpus.expanded_documents) — the same
-input at any parallelism level, which is what the N-vs-4N scaling
-protocol (BASELINE.md) requires. Expansion factor:
+input at any parallelism level, which the 1c→4c scaling protocol
+(scripts/scaling_run.py) requires. Expansion factor:
 $SPARK_GRAFT_BENCH_EXPANSION (default 40 → ~200k docs at sf0.1).
+``cluster_fp`` is the decimal(38,0) sum of ``cluster_id`` over the
+cluster table: equal values across runs mean the same labelling.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import subprocess
 import sys
 import tempfile
 import time
@@ -26,24 +30,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import pyspark.sql.functions as F
 
-from image_dedup_spark.caching import CacheScope
-from image_dedup_spark.config import DEFAULT
 from image_dedup_spark.corpus import expanded_documents
-from image_dedup_spark.functions.fingerprints import make_fingerprint_udf
-from image_dedup_spark.operators import components as CC
-from image_dedup_spark.operators import exact as EX
-from image_dedup_spark.operators import lsh as LSH
-from image_dedup_spark.operators import similarity as SIM
-from image_dedup_spark.operators import simhash_block as SB
-from image_dedup_spark.operators import substring as SUB
-from image_dedup_spark.session import get_spark, tune_for_corpus
+from image_dedup_spark.plans.pipeline import run_pipeline
+from image_dedup_spark.session import get_spark
 
 
 def _git_sha() -> str:
-    """Best-effort HEAD sha for self-stamping the bench JSON (works from
-    a spark-submit --py-files launch too — cwd is the repo)."""
-    import subprocess
-
+    """HEAD sha for stamping the bench JSON ("unknown" outside git)."""
     try:
         return subprocess.run(
             ["git", "rev-parse", "HEAD"],
@@ -61,226 +54,45 @@ def main() -> None:
     expansion = int(os.environ.get("SPARK_GRAFT_BENCH_EXPANSION", "40"))
     sf = float(sf_dir.rstrip("/").split("sf")[-1])
     spark = get_spark(app_name="image_dedup_bench")
-
     scratch_root = "/dev/shm" if os.path.isdir("/dev/shm") else None
     workdir = tempfile.mkdtemp(prefix="dedup_bench_", dir=scratch_root)
-    timings: dict[str, float] = {}
+    try:
+        # Materialize the corpus outside the timing, in a fixed 128-file
+        # layout: identical physical input at every parallelism level,
+        # and enough splits that the scan parallelizes at any core count.
+        corpus_path = os.path.join(workdir, "corpus")
+        expanded_documents(spark, sf_dir, expansion).repartition(
+            128
+        ).write.parquet(corpus_path)
+        pages = spark.read.parquet(corpus_path)
+        n_docs = pages.count()
 
-    def timed(name: str, fn):
         t0 = time.monotonic()
-        out = fn()
-        timings[name] = round(time.monotonic() - t0, 3)
-        return out
+        res = run_pipeline(spark, pages)
+        seconds = round(time.monotonic() - t0, 3)
 
-    # materialize the deterministic bench corpus (not part of the timings).
-    # Fixed 128-file layout: identical physical input at every parallelism
-    # level (the scaling protocol's requirement), and enough splits that
-    # the scan parallelizes at any core count (a single ~50MB file gives
-    # the md5/regex-heavy probe scans only ~4 tasks).
-    corpus_path = os.path.join(workdir, "corpus")
-    expanded_documents(spark, sf_dir, expansion).repartition(128).write.mode(
-        "overwrite"
-    ).parquet(corpus_path)
-    docs = spark.read.parquet(corpus_path)
-    n_docs = docs.count()
-
-    # Corpus-sized runtime confs (shuffle partitions, join preference):
-    # the 5M-doc scaling legs resolve to the scale settings (32x-cores
-    # partitions, static SHJ preference); the 200k-doc driver bench gets
-    # the small-corpus plan (the round-2 regression was these scale
-    # knobs acting on MB-sized shuffles).
-    tune_for_corpus(spark, n_docs)
-
-    # --- headline dedup stages (timed end-to-end over the corpus) --------
-    # Stage order mirrors the pipeline (and the reference's md5-first
-    # ordering): exact dedup FIRST so the Arrow fingerprint pass only
-    # sees one copy per identical text; minhash verification runs in
-    # signature-estimate mode so the shingle sketch is never materialized.
-    def _exact():
-        # One md5+normalize pass: the slim label table feeds survivors
-        # AND the exact pair edges consumed by the CC stage. Survivors
-        # are NOT materialized here: they have exactly one consumer (the
-        # fingerprint job below), so the winners join stays lazy and
-        # fuses into that job — the round-3 shape eagerly checkpointed
-        # them, re-scanning and re-writing the full text corpus through
-        # the block store for nothing (measured at 1M docs pinned: the
-        # exact stage ran ~18s at BOTH 2 and 8 cores — a pure serial +
-        # DRAM-bandwidth floor, per-stage efficiency 0.24).
-        return EX.labels(docs.select("doc_id", "text")).localCheckpoint(
-            eager=True
-        )
-
-    exact_labels = timed("q_exact_dedup", _exact)
-    exact_surv = EX.survivors_from_labels(
-        docs.select("doc_id", "url", "text"), exact_labels
-    )
-
-    fp_path = os.path.join(workdir, "fp")
-    fp_udf = make_fingerprint_udf(DEFAULT, store_sketch=False)
-
-    # The UDF stage is CPU-bound: force one partition per ~2 task waves
-    # regardless of the (tiny) byte size of its input, or AQE's byte-based
-    # coalescing runs 150k docs of Python on a couple of cores.
-    n_par = spark.sparkContext.defaultParallelism * 2
-
-    def _fingerprint():
-        (
-            exact_surv.repartition(n_par)
-            .select("doc_id", fp_udf(F.col("text")).alias("fp"))
-            .select("doc_id", "fp.minhash", "fp.simhash", "fp.n_shingles")
-            .write.mode("overwrite")
-            .parquet(fp_path)
-        )
-        return None
-
-    timed("q_fingerprint", _fingerprint)
-    fp = spark.read.parquet(fp_path)
-
-    # Candidate-table caches are scoped (caller-owned, released right
-    # after the consuming localCheckpoint — nothing persists past the
-    # stage).
-    fuse_pairs = os.environ.get("SPARK_GRAFT_FUSE_PAIRS") == "1"
-    if fuse_pairs:
-        # Scaling-leg mode (scripts/scaling_run.py): both near-dup pair
-        # families in ONE action — shared fingerprint scan, one job
-        # submission, one localCheckpoint — so the per-stage fixed floor
-        # (~9s of job-submission/AQE/barrier cost per action measured in
-        # BENCH/ANALYSIS_r2.md) is paid once, not twice. Reported as
-        # q_dup_pairs; compare against q_minhash_lsh_pairs +
-        # q_simhash_pairs of unfused runs.
-        def _near_pairs():
-            with CacheScope() as scope:
-                return (
-                    LSH.minhash_dup_pairs(
-                        fp, DEFAULT, mode="estimate", scope=scope
-                    )
-                    .unionByName(SB.simhash_dup_pairs(fp, DEFAULT, scope=scope))
-                    .localCheckpoint(eager=True)
-                )
-
-        near_pairs = timed("q_dup_pairs", _near_pairs)
-    else:
-
-        def _minhash():
-            with CacheScope() as scope:
-                return LSH.minhash_dup_pairs(
-                    fp, DEFAULT, mode="estimate", scope=scope
-                ).localCheckpoint(eager=True)
-
-        def _simhash():
-            with CacheScope() as scope:
-                return SB.simhash_dup_pairs(
-                    fp, DEFAULT, scope=scope
-                ).localCheckpoint(eager=True)
-
-        minhash_pairs = timed("q_minhash_lsh_pairs", _minhash)
-        simhash_pairs = timed("q_simhash_pairs", _simhash)
-        near_pairs = minhash_pairs.unionByName(simhash_pairs)
-
-    # Quotient-graph CC (round 4): near pairs connect only exact-dup
-    # keepers (fingerprints were computed on survivors), so label
-    # propagation runs on the near graph alone and every doc inherits
-    # its keeper's component with one join against the slim label table
-    # — identical clusters (pytest equivalence gate), without the exact
-    # star edges ever entering a propagation round. The explicit
-    # exact_pairs union this replaces made the CC loop iterate over
-    # corpus-sized label tables (measured 1M docs pinned 8c: 22.7s loop,
-    # BENCH/ANALYSIS_r4.md §8).
-    cc_probes: list = []
-    clusters = timed(
-        "q_connected_components",
-        # docs=None: exact_labels has one row per corpus doc, so the
-        # cluster table derives from it directly — no corpus-sized
-        # docs-join-back (components.assign_clusters_via_labels).
-        lambda: CC.assign_clusters_via_labels(
-            None,
-            exact_labels,
-            near_pairs,
-            DEFAULT,
-            metrics_out=cc_probes,
-        ).localCheckpoint(eager=True),
-    )
-    n_clusters = clusters.filter(F.col("is_representative")).count()
-
-    # --- secondary operators on the raw sf tables ------------------------
-    raw_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    timed(
-        "q_cdc_substring_pairs",
-        lambda: SUB.substring_dup_pairs(raw_docs, DEFAULT).count(),
-    )
-    # full embeddings table, repartitioned to the core count and pinned:
-    # a limit() here would put a single-partition GlobalLimit exchange
-    # under every consumer of the plan (the round-1 bench's negative-
-    # scaling query), and the input belongs in prep, not the timing.
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
-    n_emb = emb.count()
-    # dim is the embeddings-table contract (TESTDATA.md fixed-width
-    # vectors); probing a data row for it would be a driver action inside
-    # query construction. n_planes scales with the corpus so bucket
-    # occupancy stays bounded at any size.
-    emb_dim = 64
-    def _ann():
-        with CacheScope() as scope:
-            return SIM.lsh_topk(
-                emb,
-                dim=emb_dim,
-                k=5,
-                n_planes=SIM.planes_for(n_emb, target_bucket=8),
-                n_tables=4,
-                scope=scope,
-            ).count()
-
-    timed("q_embedding_lsh_topk", _ann)
-
-    pair_keys = (
-        ("q_dup_pairs",)
-        if fuse_pairs
-        else ("q_minhash_lsh_pairs", "q_simhash_pairs")
-    )
-    dedup_sec = sum(
-        timings[k]
-        for k in (
-            "q_fingerprint",
-            "q_exact_dedup",
-            *pair_keys,
-            "q_connected_components",
-        )
-    )
-    total = round(sum(timings.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "end_to_end_dedup_bench",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "n_docs": n_docs,
-                "n_clusters": n_clusters,
-                "dedup_pipeline_sec": round(dedup_sec, 3),
-                "docs_per_sec": round(n_docs / dedup_sec, 1),
-                "cores": spark.sparkContext.defaultParallelism,
-                # per-probe CC barrier breakdown: isolates barrier latency
-                # (the 8-19s run-to-run swing the round-2 judge flagged)
-                # from real propagation work in cross-run comparisons.
-                "cc_probes": cc_probes,
-                "fused_pairs": fuse_pairs,
-                # self-stamp: the analysis journal cites bench numbers by
-                # code version (judge r3 "what's wrong" #1) — the scaling
-                # legs' _meta carries the same sha (scaling_run overwrites
-                # _meta wholesale with git_sha + sf_dir + pinned there).
-                "_meta": {"git_sha": _git_sha()},
-            }
-        )
-    )
-    shutil.rmtree(workdir, ignore_errors=True)
-    spark.stop()
-
+        n_clusters = res.survivors.count()
+        cluster_fp = res.clusters.agg(
+            F.sum(F.col("cluster_id").cast("decimal(38,0)"))
+        ).first()[0]
+        record = {
+            "metric": "end_to_end_dedup_bench",
+            "value": seconds,
+            "unit": "sec",
+            "queries": {m["stage"]: round(m["seconds"], 3) for m in res.metrics},
+            "sf": sf,
+            "n_docs": n_docs,
+            "n_clusters": n_clusters,
+            "cluster_fp": str(cluster_fp),
+            "docs_per_sec": round(n_docs / seconds, 1),
+            "cores": spark.sparkContext.defaultParallelism,
+            "_meta": {"git_sha": _git_sha()},
+        }
+    finally:
+        # the corpus sits in /dev/shm (memory): never leave it behind
+        shutil.rmtree(workdir, ignore_errors=True)
+        spark.stop()
+    print(json.dumps(record))
 
 if __name__ == "__main__":
     main()

@@ -27,10 +27,8 @@ cluster localCheckpoint blocks are lost with an executor.
 
 from __future__ import annotations
 
-import os
-import time
-
 import pandas as pd
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -66,9 +64,20 @@ def _reset_stats(df: DataFrame) -> DataFrame:
     (``F.broadcast``) or made by AQE from RUNTIME shuffle sizes."""
     spark = df.sparkSession
     jdf = df._jdf
-    new_jdf = spark._jsparkSession.internalCreateDataFrame(
-        jdf.queryExecution().toRdd(), jdf.schema(), False
-    )
+    rdd, schema = jdf.queryExecution().toRdd(), jdf.schema()
+    try:
+        new_jdf = spark._jsparkSession.internalCreateDataFrame(rdd, schema, False)
+    except Py4JJavaError:
+        raise
+    except (AttributeError, Py4JError) as err:
+        # Py4J reports a method missing on the JVM side as a plain
+        # Py4JError; Java exceptions thrown by the call re-raise above.
+        raise RuntimeError(
+            "connected_components needs the private JVM method "
+            "SparkSession.internalCreateDataFrame(RDD[InternalRow], "
+            f"StructType, boolean), which Spark {spark.version} does not "
+            "provide"
+        ) from err
     return DataFrame(new_jdf, spark)
 
 
@@ -127,9 +136,9 @@ def connected_components(
     round into a map-side pass.
 
     ``metrics_out``: optional list that receives one dict per probe
-    barrier {"iteration", "seconds", "label_sum", "changed",
-    "converged", "mode"} — the bench uses it to separate real
-    propagation work from barrier latency when comparing runs."""
+    barrier {"iteration", "label_sum", "changed", "converged", "mode"}
+    — the round trace, with the label sum as a cross-run fingerprint of
+    the labelling."""
     # Pin the symmetrized edge table: every probe is its own Spark job,
     # and an unpinned `e` would replay the union shuffle each round
     # (shuffle reuse does not cross job boundaries). Lazy in local mode:
@@ -159,89 +168,32 @@ def connected_components(
         lazy_ok=True,
     )
 
-    id_bounds: list = []
-    wall_anchor = [time.monotonic()]
-
     def probe(lab: DataFrame, it: int, mode: str) -> tuple[int, int]:
         """One job: materializes any pending lazy checkpoints in lab's
         plan AND counts the round's changed labels (the convergence
         test) plus total vertices (the frontier-fraction gate). The
         label sum (decimal(38,0), immune to 64-bit wrap on hash-derived
         ids) is kept in the metrics as a cross-run fingerprint of the
-        labelling itself. The warm probe additionally rides the vertex
-        id bounds (for the int32 narrowing decision below) on the same
-        aggregation — no extra job."""
-        t0 = time.monotonic()
-        aggs = [
+        labelling itself."""
+        row = lab.agg(
             F.sum(F.col("changed").cast("long")),
             F.count(F.lit(1)),
             F.sum(F.col("cluster_id").cast("decimal(38,0)")),
-        ]
-        if it == -1:
-            aggs += [F.min("doc_id"), F.max("doc_id")]
-        row = lab.agg(*aggs).first()
+        ).first()
         n_changed = int(row[0] or 0)
-        if it == -1:
-            id_bounds[:] = [row[3], row[4]]
         if metrics_out is not None:
             metrics_out.append(
                 {
                     "iteration": it,
-                    "seconds": round(time.monotonic() - t0, 3),
-                    # wall since the previous probe entry: captures the
-                    # round's UNTIMED eager work (offers materialization,
-                    # broadcast-gate counts) the agg timer alone misses
-                    "round_wall": round(time.monotonic() - wall_anchor[0], 3),
                     "label_sum": str(row[2]),
                     "changed": n_changed,
                     "converged": n_changed == 0,
                     "mode": mode,
                 }
             )
-        wall_anchor[0] = time.monotonic()
         return n_changed, int(row[1] or 0)
 
     n_changed, n_vertices = probe(labels, -1, "warm")
-    # Narrow the loop's working set to int32 when every vertex id fits
-    # (doc_id <= cluster_id bounds: labels are mins of ids). The edge
-    # and label tables are re-materialized/probed every round, so at a
-    # 2-core vs 8-core pinning the loop's per-core DRAM share is the
-    # scaling bound — halving bytes per row halves the traffic both
-    # legs move. One extra pass re-pins the edge table narrow; the
-    # label cast fuses into the next round's plan. Ids outside int32
-    # (hash-derived or 10^12-scale corpora) keep the 64-bit path; the
-    # output is cast back to the input id type either way.
-    out_type = dict(edges.dtypes)[src]
-    narrowed = (
-        os.environ.get("SPARK_GRAFT_CC_NARROW", "1") == "1"
-        and n_changed > 0  # a converged warm start never re-reads the tables
-        and id_bounds[0] is not None
-        and -(2**31) <= int(id_bounds[0])
-        and int(id_bounds[1]) < 2**31
-        and out_type in ("bigint", "int")
-    )
-    if narrowed:
-        t0 = time.monotonic()
-        e = _truncate_lineage(
-            e.select(F.col("a").cast("int"), F.col("b").cast("int"))
-        )
-        e.count()  # eager: the repin cost lands in this metric, not a round's
-        labels = labels.select(
-            F.col("doc_id").cast("int"),
-            F.col("cluster_id").cast("int"),
-            "changed",
-        )
-        if metrics_out is not None:
-            metrics_out.append(
-                {
-                    "iteration": -1,
-                    "seconds": round(time.monotonic() - t0, 3),
-                    "label_sum": None,
-                    "changed": n_changed,
-                    "converged": False,
-                    "mode": "narrow_repin",
-                }
-            )
     streak = 0
     for it in range(cfg.cc_max_iterations):
         if n_changed == 0:
@@ -390,16 +342,9 @@ def connected_components(
         # Lazy checkpoint + probe = ONE job per barrier: the probe's
         # aggregation computes the round's labels, persisting them as
         # the checkpoint blocks the next round reads.
-        t_ckpt = time.monotonic()
         labels = _truncate_lineage(labels, lazy_ok=True)
-        ckpt_wall = round(time.monotonic() - t_ckpt, 3)
         n_changed, n_vertices = probe(labels, it, mode)
-        if metrics_out is not None:
-            metrics_out[-1]["ckpt_wall"] = ckpt_wall
-    return labels.select(
-        F.col("doc_id").cast(out_type).alias("doc_id"),
-        F.col("cluster_id").cast(out_type).alias("cluster_id"),
-    )
+    return labels.select("doc_id", "cluster_id")
 
 
 def assign_clusters(
@@ -421,10 +366,7 @@ def assign_clusters(
     moved = comp.filter(F.col("cluster_id") != F.col("doc_id")).withColumnRenamed(
         "doc_id", id_col
     )
-    if (
-        os.environ.get("SPARK_GRAFT_ASSIGN_BCAST", "1") == "1"
-        and moved.count() <= cfg.assign_bcast_max
-    ):
+    if moved.count() <= cfg.assign_bcast_max:
         moved = F.broadcast(moved)
     return (
         docs.join(moved, id_col, "left")
@@ -486,10 +428,7 @@ def assign_clusters_via_labels(
     comp_k = comp.filter(F.col("cluster_id") != F.col("doc_id")).select(
         F.col("doc_id").alias("keeper"), F.col("cluster_id").alias("_comp_min")
     )
-    if (
-        os.environ.get("SPARK_GRAFT_ASSIGN_BCAST", "1") == "1"
-        and comp_k.count() <= cfg.assign_bcast_max
-    ):
+    if comp_k.count() <= cfg.assign_bcast_max:
         comp_k = F.broadcast(comp_k)
     lab = (
         labels.select(F.col(id_col), "keeper")

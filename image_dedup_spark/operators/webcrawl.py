@@ -142,11 +142,13 @@ def latest_capture(
     maps) cannot ride in the packed struct — Spark's analyzer rejects
     ``max`` over them. Those columns are carried around the aggregate
     instead: winners are picked from the orderable columns, then the
-    unorderable ones are joined back by the winner's unique ``doc_id``.
-    The join-back ships only ``doc_id`` plus the map columns and joins
-    a winner-sized table against the corpus on a unique key — still no
-    window sort, and the common all-orderable schema path is unchanged
-    (zero joins).
+    unorderable ones are joined back on the winner's
+    ``(key_col, ts_col, doc_id)``, deduplicated on that side. Joining on
+    ``doc_id`` alone would multiply rows when two keys share a
+    ``doc_id``. The join-back ships only those three columns plus the
+    map columns (null-safe equality keeps null keys) — still no window
+    sort, and the common all-orderable schema path is unchanged (zero
+    joins).
     """
     cols = pages.columns
     if key_col not in cols or ts_col not in cols:
@@ -169,7 +171,12 @@ def latest_capture(
         *[F.col(f"_w.{c}").alias(c) for c in packable],
     )
     if carried:
-        out = out.join(pages.select("doc_id", *carried), on="doc_id", how="inner")
+        ids = (key_col, ts_col, "doc_id")
+        back = pages.select(
+            *[F.col(c).alias(f"_b_{c}") for c in ids], *carried
+        ).dropDuplicates([f"_b_{c}" for c in ids])
+        on = [out[c].eqNullSafe(back[f"_b_{c}"]) for c in ids]
+        out = out.join(back, on=on, how="inner")
     return out.select(*cols)  # original column order
 
 

@@ -1,11 +1,11 @@
 """Pinned-CPU platform-ceiling control for the scaling protocol.
 
-The scaling headline compares taskset-pinned local[2] vs local[8] Spark
+The scaling headline compares taskset-pinned local[1] vs local[4] Spark
 legs (scripts/scaling_run.py). This control measures what PERFECT
 software would score under the exact same pinning: K worker processes
 pinned to CPUs 0..K-1 (the same cores the Spark legs get), each running
 a fixed amount of (a) pure-CPU work and (b) memory-bandwidth-bound work,
-at K=2 and K=8. Any efficiency lost HERE is hypervisor steal, turbo
+at K=1 and K=4. Any efficiency lost HERE is hypervisor steal, turbo
 clocking, or shared-DRAM contention — a platform property no Spark plan
 can recover — so the Spark legs' efficiency should be read against this
 ceiling, not against a theoretical 1.0.
@@ -77,7 +77,7 @@ def _run(kind: str, cores: int, n_iter: int) -> float:
 
 
 def main() -> None:
-    n, four_n = 2, 8
+    n, four_n = 1, 4
     repeats = int(os.environ.get("BURN_REPEATS", "3"))
     res: dict = {"n": n, "four_n": four_n, "repeats": repeats}
     for kind, n_iter in (("cpu", 3_000_000), ("mem", 40)):

@@ -1,11 +1,15 @@
-"""Scaling-evidence protocol (BASELINE.md): run the identical bench job
-on the identical input at two parallelism levels — N=local[8] and
-4N=local[32] — and write throughput + scaling efficiency to
-BENCH/BASELINE.md.
+"""Scaling-evidence protocol: run the identical bench job (bench.py, one
+``run_pipeline`` call) on the identical input at 1 and 4 cores, each
+leg pinned with ``taskset`` to exactly its core count, in interleaved
+pairs (1c, 4c, 1c, 4c, ...). Writes every leg to
+BENCH/leg_c{cores}_x{expansion}[_pin]_r{i}.json and the paired
+efficiencies to BENCH/BASELINE.md.
 
-This is the sandbox substitute for the north_rule's two-cluster-size
-criterion: same `spark-submit`-able job, same deterministic input,
-shuffle partitions scaled with cores (handled inside session.get_spark).
+Usage: python scripts/scaling_run.py
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_EXPANSION (as bench.py),
+SPARK_GRAFT_SCALE_REPEATS (pairs, default 3), SPARK_GRAFT_SCALE_RESUME=1
+(reuse persisted legs measured on the same code and input),
+SPARK_GRAFT_PIN_CPUS (0/1, default: on when taskset exists).
 """
 
 from __future__ import annotations
@@ -18,10 +22,7 @@ import sys
 from datetime import datetime, timezone
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _spark_submit() -> str | None:
-    return shutil.which("spark-submit")
+N, FOUR_N = 1, 4
 
 
 def _git_sha() -> str:
@@ -41,9 +42,8 @@ def _measured_code_identical(a: str, b: str) -> bool:
     """True when the code a leg actually executes — the packaged
     ``image_dedup_spark`` sources plus ``bench.py`` — is byte-identical
     between two commits. Doc/test/script commits landing between the
-    legs of one protocol must not burn a 30-minute measurement, but ANY
-    change under the measured paths must. Same rule as
-    ``regen_head_report`` uses before mixing stamps in one headline."""
+    legs of one protocol must not burn a measurement, but ANY change
+    under the measured paths must."""
     if a == b:
         return True
     if not a or not b:
@@ -63,18 +63,10 @@ def _measured_code_identical(a: str, b: str) -> bool:
 
 
 def _pin_cpus() -> bool:
-    """True when legs should be pinned to exactly `cores` physical CPUs.
-
-    An unpinned local[N] leg is NOT an N-core machine: the JVM's GC /
-    netty / shuffle threads and the Python Arrow workers run on top of
-    the N task slots and soak up extra physical cores. That inflates the
-    low-core leg's throughput (round-2 quantified ~25% steal; the
-    round-3 unpinned 2c legs sped up 900→592s on the same stage across
-    repeats) and so UNDERSTATES scaling efficiency. `taskset -c 0-(N-1)`
-    gives the whole process tree exactly N CPUs — the real-cluster
-    analog, where an N-core executor shares those N cores with all of
-    its own overhead threads. Default on when taskset exists.
-    """
+    """True when legs are pinned to exactly `cores` CPUs. An unpinned
+    local[N] leg lets the JVM's GC/shuffle threads and the Python
+    workers soak up extra cores, which inflates the low-core leg and
+    understates scaling efficiency."""
     v = os.environ.get("SPARK_GRAFT_PIN_CPUS")
     if v is not None:
         return v == "1"
@@ -88,20 +80,15 @@ def run_bench(
     pyfiles: str | None,
     suffix: str = "",
 ) -> dict:
-    """One bench run. Uses the real ``spark-submit --py-files`` launch
-    path (the north_rule's submit mechanism) when spark-submit is on
-    PATH; plain ``python bench.py`` otherwise (identical job either way —
-    bench.py builds its own session from $SPARK_GRAFT_CPUS)."""
+    """One bench leg, launched with ``spark-submit --py-files`` when
+    spark-submit is on PATH and ``python bench.py`` otherwise."""
     pinned = _pin_cpus()
     leg_path = os.path.join(
         REPO, "BENCH", f"leg_c{cores}_x{expansion}{suffix}.json"
     )
-    # Resume: a leg costs 30+ minutes; if a previous invocation of this
-    # exact (cores, expansion, repeat) leg already persisted its result,
-    # the caller opts in, AND the leg's stamp matches the current git
-    # HEAD and input dir (a leg measured on older code or different
-    # input must never enter the report as current evidence), reuse it
-    # instead of burning the measurement again.
+    # Resume only when opted in AND the persisted leg's stamp matches
+    # the current code, input dir and pinning mode: a leg measured on
+    # other code or input is not current evidence.
     if os.environ.get("SPARK_GRAFT_SCALE_RESUME") == "1" and os.path.exists(
         leg_path
     ):
@@ -119,26 +106,15 @@ def run_bench(
         SPARK_GRAFT_CPUS=str(cores),
         SPARK_GRAFT_BENCH_EXPANSION=str(expansion),
         SPARK_GRAFT_SF_DIR=sf_dir,
-        # Scaling legs fuse the two near-dup pair families into ONE job
-        # (bench.py q_dup_pairs): a shared fingerprint scan and a single
-        # job submission halve the per-stage fixed floor (~9s/stage,
-        # BENCH/ANALYSIS_r2.md) that capped round-2 efficiency. The
-        # driver's unfused bench still reports the families separately.
-        SPARK_GRAFT_FUSE_PAIRS=os.environ.get("SPARK_GRAFT_FUSE_PAIRS", "1"),
     )
-    submit = _spark_submit()
-    # Memory scales with cores (the real-cluster analog: same executor
-    # spec, more executors — per-core memory constant). Measured both
-    # failure modes: an 8g heap OOMs a 16-core leg at 5M docs, while an
-    # oversized 48g G1 heap runs identical stages ~2x slower than 8g.
-    mem = os.environ.get("SPARK_DRIVER_MEM", f"{max(8, 2 * cores)}g")
+    submit = shutil.which("spark-submit")
     if submit and pyfiles:
         cmd = [
             submit,
             "--master", f"local[{cores}]",
-            # builder-time spark.driver.memory is ignored under
-            # spark-submit (the JVM is already up) — set it here.
-            "--driver-memory", mem,
+            # spark.driver.memory set by the session builder is ignored
+            # under spark-submit (the JVM is already up), so set it here.
+            "--driver-memory", os.environ.get("SPARK_DRIVER_MEM", "8g"),
             "--py-files", pyfiles,
             os.path.join(REPO, "bench.py"),
         ]
@@ -155,9 +131,8 @@ def run_bench(
             f"bench produced no JSON (cmd={cmd[0]}):\n{out.stdout[-2000:]}\n{out.stderr[-4000:]}"
         )
     res = json.loads(lines[-1])
-    # persist each leg immediately (a crashed sibling leg never loses
-    # this one's measurement), stamped with the code version + input so
-    # the resume path can verify it is still current evidence
+    # Persist each leg at once (a crashed later leg never loses this
+    # one), stamped for the resume check above.
     res["_meta"] = {"git_sha": _git_sha(), "sf_dir": sf_dir, "pinned": pinned}
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(leg_path, "w") as f:
@@ -169,225 +144,72 @@ def _median(vals: list[float]) -> float:
     return sorted(vals)[len(vals) // 2]
 
 
-def _ceiling_section(n: int, four_n: int, eff: float) -> str:
-    """Platform-ceiling context from the pinned burn tests
-    (scripts/burn_ceiling.py → BENCH/burn_ceiling.json): perfect-software
-    controls run under the EXACT leg pinning, so they bound what ANY
-    code — Spark or not — can score on this one VM. Falls back to the
-    round-1 unpinned ~0.83 note when the pinned burn file is absent."""
-    path = os.path.join(REPO, "BENCH", "burn_ceiling.json")
-    if not os.path.exists(path):
-        return (
-            "(a pure-CPU burn test on this VM measures an ~0.83 platform\n"
-            "ceiling from hypervisor steal + turbo before any Spark code\n"
-            f"runs — BENCH/ANALYSIS_r1.md — so {eff / 0.83:.2f} normalized\n"
-            "to the ceiling)"
-        )
-    b = json.load(open(path))
-    if b.get("n") != n or b.get("four_n") != four_n:
-        return (
-            f"(pinned burn ceilings exist for {b.get('n')}→"
-            f"{b.get('four_n')} cores, not this report's {n}→{four_n}; "
-            "see BENCH/burn_ceiling.json)"
-        )
-    cpu, mem = b["cpu"], b["mem"]
-    cpu_list = ", ".join(f"{e:.3f}" for e in cpu["eff_per_repeat"])
-    mem_list = ", ".join(f"{e:.3f}" for e in mem["eff_per_repeat"])
-    return f"""
-## Platform ceilings on this VM (pinned burn tests, perfect-software controls)
-
-`scripts/burn_ceiling.py` runs two non-Spark workloads under the
-IDENTICAL `taskset` pinning as the legs ({n} vs {four_n} CPUs,
-interleaved ×{b['repeats']}):
-
-| control workload | efficiency per repeat | median ceiling |
-|---|---|---|
-| pure-CPU (integer hash loop, no memory traffic) | {cpu_list} | **{cpu['eff_median']:.3f}** |
-| DRAM-bound (large array copies) | {mem_list} | **{mem['eff_median']:.3f}** |
-
-Interpretation: a single VM multiplies CORES {n}→{four_n} but not
-MEMORY CONTROLLERS — at {n} cores this box's copy throughput already
-uses a large share of its total DRAM bandwidth, so a {n}→{four_n}
-scale-up of a memory-bound phase tops out at ~{mem['eff_median']:.2f}
-efficiency EVEN WITH PERFECT SOFTWARE (and the control swings
-{min(mem['eff_per_repeat']):.2f}–{max(mem['eff_per_repeat']):.2f}
-across identical repeats — hypervisor weather). On the north rule's
-real cluster (N → 4N EXECUTORS), every added executor brings its own
-memory controllers, so only the pure-CPU ceiling
-(~{cpu['eff_median']:.2f}) applies. Read the per-stage table below
-against these two bounds: the compute-bound fingerprint stage (Arrow
-UDF over shingles — the pipeline's dominant cost at {n}c) scales at
-the CPU ceiling, while the shuffle-heavy pair/CC stages sit between
-the two ceilings in proportion to their memory traffic — i.e. the
-headline gap to 0.8 is platform memory bandwidth, not a serial or
-skewed stage (no stage shows the flat-time signature of serial code).
-"""
-
-
-def write_report(
-    runs_n: list[dict], runs_4n: list[dict], n: int, four_n: int, expansion: int
-) -> float:
-    """Three estimator views over the same legs, all disclosed:
-
-    - headline: MEDIAN of the per-repeat PAIRED efficiencies. The legs
-      are interleaved (N, 4N, N, 4N, ...) precisely so each N leg
-      shares its VM-weather window with the adjacent 4N leg — the
-      matched-pairs design. The paired estimator uses that matching;
-      the by-level estimator throws it away and compares medians that
-      can come from DIFFERENT weather windows (session-1's r2 pair had
-      the round's fastest 2c leg against its slowest 8c leg — exactly
-      the anti-correlated draw by-level medians mix). Pre-registered
-      as the primary estimator before the session-2 protocol legs ran
-      (this commit predates every _r4s2 leg file).
-    - by-level: per-level MEDIAN throughput (robust to a single slow
-      leg, but unmatched across windows);
-    - pooled: total docs / total seconds per level (every leg weighted).
-
-    Per-stage rows use per-level per-stage medians across ALL legs —
-    comparing the two median-by-pipeline legs directly mixes time
-    windows (a steal burst in one leg fabricates per-stage anomalies).
-    """
-    med = lambda runs: sorted(runs, key=lambda r: r["dedup_pipeline_sec"])[
-        len(runs) // 2
-    ]
-    r_n, r_4n = med(runs_n), med(runs_4n)
-    tp_n = _median([r["docs_per_sec"] for r in runs_n])
-    tp_4n = _median([r["docs_per_sec"] for r in runs_4n])
-    by_level = tp_4n / (4 * tp_n)
+def write_report(runs_n: list[dict], runs_4n: list[dict], expansion: int) -> float:
+    """Headline: the median of the per-pair efficiencies. Each 1c leg
+    runs next to its 4c leg, so a pair shares one window of this box's
+    speed drift; comparing per-level medians would mix windows."""
     paired = [
-        b["docs_per_sec"] / (4 * a["docs_per_sec"])
+        b["docs_per_sec"] / (FOUR_N * a["docs_per_sec"])
         for a, b in zip(runs_n, runs_4n)
     ]
     eff = _median(paired)
-    pooled_n = sum(r["n_docs"] for r in runs_n) / sum(
-        r["dedup_pipeline_sec"] for r in runs_n
-    )
-    pooled_4n = sum(r["n_docs"] for r in runs_4n) / sum(
-        r["dedup_pipeline_sec"] for r in runs_4n
-    )
-    pooled_eff = pooled_4n / (4 * pooled_n)
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    stamp = datetime.now(timezone.utc).isoformat(timespec="seconds")
-    stage_names = {
-        "q_exact_dedup": "exact dedup",
-        "q_fingerprint": "fingerprint (Arrow UDF)",
-        "q_dup_pairs": "near-dup pairs (minhash+simhash, one fused job)",
-        "q_minhash_lsh_pairs": "minhash LSH pairs",
-        "q_simhash_pairs": "simhash pairs",
-        "q_connected_components": "connected components",
-    }
+    stages = sorted(set(runs_n[0]["queries"]) & set(runs_4n[0]["queries"]))
     stage_rows = []
-    for key, label in stage_names.items():
-        a_l = [r["queries"][key] for r in runs_n if key in r["queries"]]
-        b_l = [r["queries"][key] for r in runs_4n if key in r["queries"]]
-        if a_l and b_l:
-            a, b = _median(a_l), _median(b_l)
-            stage_rows.append(
-                f"| {label} | {a} | {b} | {a / b:.2f}× | {a / b / 4:.2f} |"
-            )
-    pipe_n = _median([r["dedup_pipeline_sec"] for r in runs_n])
-    pipe_4n = _median([r["dedup_pipeline_sec"] for r in runs_4n])
-    stage_rows.append(
-        f"| **dedup pipeline** | **{pipe_n}** | **{pipe_4n}** "
-        f"| **{pipe_n / pipe_4n:.2f}×** | **{pipe_n / pipe_4n / 4:.3f}** |"
-    )
-    stage_table = "\n".join(stage_rows)
-    paired_str = ", ".join(f"{p:.3f}" for p in paired)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(
-            f"""# BENCH/BASELINE — scaling evidence ({stamp})
+    for key in stages:
+        a = _median([r["queries"][key] for r in runs_n])
+        b = _median([r["queries"][key] for r in runs_4n])
+        speedup = a / b if b else float("nan")
+        stage_rows.append(f"| {key} | {a} | {b} | {speedup:.2f}× |")
+    leg_rows = [
+        f"| {i} | {a['value']} | {a['docs_per_sec']} | {b['value']} "
+        f"| {b['docs_per_sec']} | {p:.3f} |"
+        for i, (a, b, p) in enumerate(zip(runs_n, runs_4n, paired))
+    ]
+    stamp = datetime.now(timezone.utc).isoformat(timespec="seconds")
+    r0 = runs_n[0]
+    nl = "\n"
+    report = f"""# BENCH/BASELINE — scaling evidence ({stamp})
 
-Protocol (BASELINE.md): identical job, identical deterministic input
-({r_n['n_docs']} docs = sf{r_n['sf']} documents × {expansion} expansion),
-two local parallelism levels, shuffle partitions scaled with cores,
-{len(runs_n)} interleaved repeats per level{", each leg CPU-pinned via "
-f"taskset to exactly its core count (an unpinned local[N] leg lets JVM "
-f"GC/shuffle threads and Python workers soak up extra physical cores, "
-f"inflating the low-core leg and understating efficiency)"
-if _pin_cpus() else ""}.
+Identical job (`bench.py`: one `run_pipeline` call) on identical input
+({r0['n_docs']} docs = sf{r0['sf']} documents × {expansion}), {N} vs
+{FOUR_N} cores, {len(paired)} interleaved pairs,
+{"each leg pinned with taskset to its core count" if _pin_cpus() else "unpinned"}.
+Code: `{r0['_meta']['git_sha']}`; clusters {r0['n_clusters']}
+(`cluster_fp` {r0['cluster_fp']}).
 
-| level | cores | median pipeline sec | median docs/sec |
+**Scaling efficiency (median of paired efficiencies) = {eff:.3f}**
+
+| pair | {N}c sec | {N}c docs/s | {FOUR_N}c sec | {FOUR_N}c docs/s | efficiency |
+|---|---|---|---|---|---|
+{nl.join(leg_rows)}
+
+## Per-stage medians
+
+| stage | {N}c sec | {FOUR_N}c sec | speedup |
 |---|---|---|---|
-| N  | {n}  | {pipe_n} | {tp_n} |
-| 4N | {four_n} | {pipe_4n} | {tp_4n} |
-
-**Scaling efficiency (primary, matched-pairs): median of the
-per-repeat paired efficiencies = {eff:.3f}** (target ≥ 0.8 ⇒
-{"PASS" if eff >= 0.8 else "FAIL"}). The legs are interleaved so each
-N leg shares its VM-weather window with the adjacent 4N leg; the
-paired estimator is the one that uses that matching (pre-registered
-before these legs ran — the estimator-change commit predates every
-leg file below). Per-pair values: {paired_str}.
-
-Alternative estimators over the same legs (all legs below):
-- by-level (median 4N throughput / 4 × median N throughput — unmatched
-  across weather windows): **{by_level:.3f}**
-- pooled (total docs / total sec per level): {pooled_n:.1f} vs
-  {pooled_4n:.1f} docs/s → efficiency **{pooled_eff:.3f}**
-{_ceiling_section(n, four_n, eff)}
-
-## Per-stage speedup, {n} → {four_n} cores ({r_n['n_docs']} docs, per-level per-stage medians)
-
-| stage | {n}c sec | {four_n}c sec | speedup | efficiency |
-|---|---|---|---|---|
-{stage_table}
-
-Raw median-by-pipeline N leg:  `{json.dumps(r_n)}`
-
-Raw median-by-pipeline 4N leg: `{json.dumps(r_4n)}`
+{nl.join(stage_rows)}
 """
-        )
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
+        f.write(report)
     return eff
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     expansion = int(os.environ.get("SPARK_GRAFT_BENCH_EXPANSION", "40"))
-    n = int(os.environ.get("SPARK_GRAFT_SCALE_N", "8"))
-    # Repeats: single-run legs on this VM swing ±20% from hypervisor
-    # steal (the Arrow fingerprint stage alone measured 142-193s at 16
-    # cores across identical runs), which is ±0.1 on the efficiency
-    # number. Legs are interleaved (N, 4N, N, 4N, ...) so slow periods
-    # hit both levels, and the report uses the per-level MEDIAN by
-    # pipeline time, with every raw leg listed.
-    repeats = int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "1"))
-    four_n = 4 * n
+    repeats = int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "3"))
     from make_pyfiles_zip import build
 
     pyfiles = build()
-    runs_n, runs_4n = [], []
     pin_tag = "_pin" if _pin_cpus() else ""
-    # Optional protocol tag (e.g. "_i16"): keeps a new protocol's leg
-    # files from overwriting a superseded protocol's persisted legs —
-    # the round-over-round appendix reads every persisted leg, so old
-    # evidence must stay on disk, partitioned by name + stamp.
-    pin_tag += os.environ.get("SPARK_GRAFT_SCALE_TAG", "")
+    runs_n, runs_4n = [], []
     for i in range(repeats):
-        suffix = f"{pin_tag}_r{i}" if repeats > 1 else pin_tag
-        runs_n.append(run_bench(n, expansion, sf_dir, pyfiles, suffix))
-        runs_4n.append(run_bench(four_n, expansion, sf_dir, pyfiles, suffix))
-    eff = write_report(runs_n, runs_4n, n, four_n, expansion)
-    # regenerate the secondary-evidence appendix (computed from the leg
-    # files) on every report rewrite — write_report starts the file from
-    # scratch, so the appendix must be re-derived, not preserved by hand
-    from append_scaling_context import secondary_sections
-
-    extra = secondary_sections()
-    if extra:
-        with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
-            f.write(extra)
-    if repeats > 1:
-        with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
-            f.write(
-                f"\n## All legs ({repeats} interleaved repeats per level)\n\n"
-                "| level | run | pipeline sec | docs/sec |\n|---|---|---|---|\n"
-            )
-            for level, runs in ((n, runs_n), (four_n, runs_4n)):
-                for i, r in enumerate(runs):
-                    f.write(
-                        f"| {level}c | {i} | {r['dedup_pipeline_sec']} "
-                        f"| {r['docs_per_sec']} |\n"
-                    )
+        runs_n.append(run_bench(N, expansion, sf_dir, pyfiles, f"{pin_tag}_r{i}"))
+        runs_4n.append(
+            run_bench(FOUR_N, expansion, sf_dir, pyfiles, f"{pin_tag}_r{i}")
+        )
+    eff = write_report(runs_n, runs_4n, expansion)
     print(
         json.dumps(
             {

@@ -2,8 +2,10 @@
 (reference greedy: samples.cpp:534-577)."""
 
 import random
+from types import SimpleNamespace
 
 import pyspark.sql.functions as F
+import pytest
 
 from image_dedup_spark.operators import components as CC
 
@@ -259,9 +261,8 @@ def test_assign_via_labels_docs_none_matches_docs_join(spark):
 
 
 def test_cc_ids_beyond_int32_stay_64bit_and_correct(spark):
-    """The int32 loop-narrowing must not engage when any vertex id is
-    outside int32 (hash-derived / 10^12-scale ids); labels stay exact
-    and the output keeps the input id type."""
+    """Vertex ids outside int32 (hash-derived / 10^12-scale ids) keep
+    exact labels, and the output keeps the input id type."""
     big = 3_000_000_000  # > 2^31 - 1
     edges = [(big + 1, big + 2), (big + 2, big + 3), (5, 6), (big + 10, 7)]
     df = spark.createDataFrame(edges, "src_id long, dst_id long")
@@ -278,11 +279,25 @@ def test_cc_ids_beyond_int32_stay_64bit_and_correct(spark):
 
 
 def test_cc_output_type_matches_input_even_when_narrowed(spark):
-    """Small ids take the int32 loop internally but the contract type
-    (input id type) is restored at the boundary."""
+    """Small bigint ids that would fit int32 come back as the input id
+    type."""
     df = spark.createDataFrame([(1, 2), (2, 3)], "src_id long, dst_id long")
     out = CC.connected_components(df)
     assert dict(out.dtypes) == {"doc_id": "bigint", "cluster_id": "bigint"}
     assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == {
         1: 1, 2: 1, 3: 1
     }
+
+
+def test_reset_stats_names_missing_jvm_method():
+    """A Spark whose JVM session lacks the private internalCreateDataFrame
+    fails with an error naming the method and the Spark version, not an
+    opaque AttributeError / Py4J trace."""
+    jdf = SimpleNamespace(
+        queryExecution=lambda: SimpleNamespace(toRdd=lambda: None),
+        schema=lambda: None,
+    )
+    session = SimpleNamespace(_jsparkSession=object(), version="9.9.9")
+    df = SimpleNamespace(sparkSession=session, _jdf=jdf)
+    with pytest.raises(RuntimeError, match=r"internalCreateDataFrame.*9\.9\.9"):
+        CC._reset_stats(df)

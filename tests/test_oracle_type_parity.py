@@ -129,9 +129,18 @@ def test_oracle_type_parity(spark, duck, name, sql):
     )
 
 
+# queries() entries that deliberately have no oracle (compared on rows
+# only). Empty today: every query is oracle-checked.
+ROWS_ONLY: set[str] = set()
+
+
 def test_every_query_has_oracle_or_is_declared():
-    """Every queries() entry either has an oracle or is a deliberate
+    """Every queries() entry either has an oracle or is a declared
     rows-only query. Keeps the oracle surface from silently shrinking."""
     qs = set(entrymod.queries())
     orc = set(entrymod.oracle_sql())
     assert orc <= qs, f"oracles without queries: {sorted(orc - qs)}"
+    assert qs - orc == ROWS_ONLY, (
+        f"queries without an oracle: {sorted(qs - orc - ROWS_ONLY)}; "
+        f"declared rows-only but oracled: {sorted(ROWS_ONLY & orc)}"
+    )

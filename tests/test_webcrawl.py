@@ -134,7 +134,8 @@ def test_latest_capture_keeps_max_ts_full_row(spark):
 def test_latest_capture_with_map_column(spark):
     """A map-typed payload column (unorderable — would fail analysis
     inside max(struct(...))) is carried around the aggregate and joined
-    back by the winner's doc_id; values follow the winning row."""
+    back by the winner's (url, warc_ts, doc_id); values follow the
+    winning row."""
     df = spark.createDataFrame(
         [
             (1, "u1", 100, {"etag": "a"}, "x"),
@@ -147,6 +148,28 @@ def test_latest_capture_with_map_column(spark):
     assert out.columns == df.columns
     got = {r["url"]: (r["doc_id"], r["headers"], r["t"]) for r in out.collect()}
     assert got == {"u1": (2, {"etag": "b"}, "y"), "u2": (3, {"etag": "c"}, "z")}
+
+
+def test_latest_capture_map_column_shared_doc_id_no_row_multiplication(spark):
+    """Two pages sharing a doc_id under different urls: the map-column
+    join-back must still yield one row per url, each with its own
+    headers (a doc_id-only join-back yields four rows)."""
+    df = spark.createDataFrame(
+        [
+            (7, "u1", 100, {"etag": "a"}),
+            (7, "u2", 200, {"etag": "b"}),
+            (8, None, 50, {"etag": "n"}),
+        ],
+        "doc_id long, url string, warc_ts long, headers map<string,string>",
+    )
+    out = WC.latest_capture(df, key_col="url", ts_col="warc_ts").collect()
+    assert len(out) == 3
+    got = {r["url"]: (r["doc_id"], r["warc_ts"], r["headers"]) for r in out}
+    assert got == {
+        "u1": (7, 100, {"etag": "a"}),
+        "u2": (7, 200, {"etag": "b"}),
+        None: (8, 50, {"etag": "n"}),
+    }
 
 
 def test_latest_capture_rejects_unorderable_key(spark):
