@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from image_dedup_spark.config import DEFAULT, DedupConfig
 from image_dedup_spark.functions.hashing import hamming, popcount
+from image_dedup_spark.operators.lsh import jaccard_score, keep_scored
 
 
 def triangle_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -26,12 +27,13 @@ def exact_jaccard_pairs(
 ) -> DataFrame:
     """Exact-Jaccard all-pairs (shingle sketches), threshold >= cfg value."""
     t = triangle_pairs(fingerprints.select("doc_id", "shingles", "n_shingles"))
-    inter = F.size(F.array_intersect("a_shingles", "b_shingles"))
-    union = F.col("a_n_shingles") + F.col("b_n_shingles") - inter
-    score = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
     return (
-        t.withColumn("score", score)
-        .filter(F.col("score") >= cfg.jaccard_threshold)
+        keep_scored(
+            t,
+            F.size(F.array_intersect("a_shingles", "b_shingles")),
+            jaccard_score(F.col("a_n_shingles"), F.col("b_n_shingles")),
+            cfg.jaccard_threshold,
+        )
         .select(
             F.col("a_doc_id").alias("src_id"),
             F.col("b_doc_id").alias("dst_id"),

@@ -24,6 +24,7 @@ lower-triangle ``i > j`` (samples.cpp:603-633) with deterministic ids.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import replace
 
 from pyspark.sql import Column, DataFrame, Window
@@ -238,6 +239,43 @@ def _sig_jaccard_estimate(a: Column, b: Column, k: int) -> Column:
     return F.size(F.filter(eq, lambda e: e)) / F.lit(k)
 
 
+def keep_scored(
+    j: DataFrame,
+    value: Column,
+    score: Callable[[Column], Column],
+    threshold: float,
+) -> DataFrame:
+    """Rows of ``j`` with ``score(v) >= threshold``, plus a ``score``
+    column, where ``v`` is ``value`` evaluated ONCE per row.
+
+    Catalyst inlines a derived column into every consumer: the threshold
+    filter is pushed into the preceding join's condition and the
+    projection keeps its own copy, so ``withColumn("score", …).filter(…)``
+    over an exact-Jaccard score (the intersection is used 3 times) runs
+    ``array_intersect`` 6 times per pair. A generator's output cannot be
+    substituted back into a pushed-down predicate, so the one-row
+    ``inline`` pins ``v`` to a single evaluation after the join; only the
+    scalar arithmetic of ``score`` is repeated. The reference likewise
+    computes each pair's distance once and compares that value
+    (samples.cpp:616-621)."""
+    once = j.select("*", F.inline(F.array(F.struct(value.alias("_v")))))
+    return (
+        once.withColumn("score", score(F.col("_v")))
+        .filter(F.col("score") >= threshold)
+        .drop("_v")
+    )
+
+
+def jaccard_score(a_n: Column, b_n: Column) -> Callable[[Column], Column]:
+    """Exact Jaccard from the intersection size and both set sizes."""
+
+    def score(inter: Column) -> Column:
+        union = a_n + b_n - inter
+        return F.when(union > 0, inter / union).otherwise(F.lit(1.0))
+
+    return score
+
+
 def verify_pairs(
     pairs: DataFrame,
     fingerprints: DataFrame,
@@ -358,18 +396,27 @@ def verify_pairs(
             )
             .filter(prefilter)
         )
+    # Score through keep_scored, not withColumn+filter: Catalyst would
+    # copy the array expression into the join condition and the
+    # projection (6 array_intersect / 2 zip_with evaluations per pair).
     if mode == "exact":
-        inter = F.size(F.array_intersect("a_payload", "b_payload"))
-        union = F.col("a_n_shingles") + F.col("b_n_shingles") - inter
-        score = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
+        kept = keep_scored(
+            j,
+            F.size(F.array_intersect("a_payload", "b_payload")),
+            jaccard_score(F.col("a_n_shingles"), F.col("b_n_shingles")),
+            cfg.jaccard_threshold,
+        )
     else:
-        score = _sig_jaccard_estimate(
-            F.col("a_payload"), F.col("b_payload"), cfg.num_hashes
+        kept = keep_scored(
+            j,
+            _sig_jaccard_estimate(
+                F.col("a_payload"), F.col("b_payload"), cfg.num_hashes
+            ),
+            lambda est: est,
+            cfg.jaccard_threshold,
         )
     return (
-        j.withColumn("score", score)
-        .filter(F.col("score") >= cfg.jaccard_threshold)
-        .select("src_id", "dst_id", "score")
+        kept.select("src_id", "dst_id", "score")
         .withColumn("stage", F.lit("minhash"))
     )
 

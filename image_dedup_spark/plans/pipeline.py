@@ -81,14 +81,12 @@ def _check_format_marker(
 ) -> None:
     if not checkpoint_dir:
         return
-    import os
-
     expect = _format_marker_value(
         include_substring, verify_mode, sequential, minhash_bits
     )
-    marker = os.path.join(checkpoint_dir, "_PIPELINE_FORMAT")
-    if os.path.exists(marker):
-        found = open(marker).read().strip()
+    marker = IO.stage_path(checkpoint_dir, "_PIPELINE_FORMAT")
+    if IO.path_exists(marker):
+        found = IO.read_text(marker).strip()
         if found != expect:
             raise RuntimeError(
                 f"checkpoint dir {checkpoint_dir} was written by pipeline "
@@ -97,9 +95,7 @@ def _check_format_marker(
                 "across incompatible stage layouts or run modes"
             )
     else:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write(expect)
+        IO.write_text(marker, expect)
 
 
 @dataclass

@@ -7,7 +7,10 @@ the next stage runs, which is what makes its CLI resumable per stage
 samples.cpp:379-425). Here each stage is a parquet directory (Iceberg
 would be a drop-in at deployment — the runtime here has no Iceberg jar,
 so parquet is the documented fallback) with an atomic ``_SUCCESS``
-marker; ``stage_exists`` gates resume.
+marker; ``stage_exists`` gates resume. Existence checks and the layout
+marker go through the Hadoop ``FileSystem`` of the path's scheme, like the
+parquet reads and writes, so a ``file://`` or ``s3a://`` checkpoint dir
+resumes the same as a plain local path.
 """
 
 from __future__ import annotations
@@ -22,10 +25,45 @@ def stage_path(checkpoint_dir: str, stage: str) -> str:
     return os.path.join(checkpoint_dir, stage)
 
 
+def _hadoop_path(path: str):
+    """(FileSystem, Path) for ``path`` under the active session's Hadoop
+    configuration — the scheme (none, ``file://``, ``s3a://``, …) picks
+    the filesystem, as it does for ``spark.read``/``df.write``."""
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        raise RuntimeError(f"no active SparkSession to resolve {path!r}")
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def path_exists(path: str) -> bool:
+    fs, p = _hadoop_path(path)
+    return fs.exists(p)
+
+
+def read_text(path: str) -> str:
+    fs, p = _hadoop_path(path)
+    stream = fs.open(p)
+    try:
+        return bytes(stream.readAllBytes()).decode("utf-8")
+    finally:
+        stream.close()
+
+
+def write_text(path: str, text: str) -> None:
+    """Create (or replace) the file ``path``, making parent dirs."""
+    fs, p = _hadoop_path(path)
+    stream = fs.create(p, True)
+    try:
+        stream.write(text.encode("utf-8"))
+    finally:
+        stream.close()
+
+
 def stage_exists(checkpoint_dir: str | None, stage: str) -> bool:
     if not checkpoint_dir:
         return False
-    return os.path.exists(os.path.join(stage_path(checkpoint_dir, stage), "_SUCCESS"))
+    return path_exists(os.path.join(stage_path(checkpoint_dir, stage), "_SUCCESS"))
 
 
 def write_stage(df: DataFrame, checkpoint_dir: str, stage: str) -> None:

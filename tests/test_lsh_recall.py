@@ -3,6 +3,7 @@ dup-pair recall >= 0.99 at the same shingle/signature/band config
 (reference exact scan: samples.cpp:580-633)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from image_dedup_spark.config import DEFAULT
 from image_dedup_spark.operators import bruteforce as BF
@@ -165,3 +166,44 @@ def test_hybrid_verify_matches_exact(spark, fingerprints):
         for r in LSH.minhash_dup_pairs(fp, tight, mode="hybrid").collect()
     }
     assert tight_pairs <= exact
+
+
+def _plan_count(df, name: str) -> int:
+    return df._jdf.queryExecution().optimizedPlan().toString().count(name)
+
+
+@pytest.mark.parametrize(
+    "query, expr",
+    [
+        ("exact", "array_intersect"),
+        ("hybrid", "array_intersect"),
+        ("estimate", "zip_with"),
+        ("bruteforce", "array_intersect"),
+    ],
+)
+def test_verify_scores_each_pair_once(spark, query, expr):
+    """The optimized plan evaluates each pair's score expression once.
+    A derived score column that is both filtered and projected gets
+    inlined into the pushed-down join condition and the projection
+    (6 array_intersect / 2 zip_with per pair); the pairs kept and their
+    scores are the same either way."""
+    k = DEFAULT.num_hashes
+    same = list(range(k))
+    fp = spark.createDataFrame(
+        [
+            (1, [1, 2, 3, 4], 4, same),
+            (2, [1, 2, 3, 4, 5], 5, same[: k - 20] + [-1] * 20),
+            (3, [1, 2, 9, 10], 4, [-2] * k),
+        ],
+        "doc_id long, shingles array<long>, n_shingles int, minhash array<int>",
+    )
+    if query == "bruteforce":
+        df = BF.exact_jaccard_pairs(fp)
+    else:
+        pairs = spark.createDataFrame(
+            [(1, 2), (1, 3), (2, 3)], "src_id long, dst_id long"
+        )
+        df = LSH.verify_pairs(pairs, fp, mode=query)
+    assert _plan_count(df, expr) == 1
+    expected = (1, 2, (k - 20) / k if query == "estimate" else 4 / 5)
+    assert [tuple(r)[:3] for r in df.collect()] == [expected]

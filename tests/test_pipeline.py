@@ -1,8 +1,10 @@
 """End-to-end pipeline + resume idempotence (SURVEY.md §5 tiers 3-4)."""
 
+import os
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from image_dedup_spark.plans.pipeline import run_pipeline
 
@@ -80,15 +82,20 @@ def test_sequential_counterexample_semantics(spark):
     assert {r.doc_id: r.cluster_id for r in seq.collect()} == {1: 1, 2: 1, 3: 3}
 
 
-def test_pipeline_resume_idempotent(spark, corpus, tmp_path_factory):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file_uri"])
+def test_pipeline_resume_idempotent(spark, corpus, tmp_path_factory, scheme):
+    """Resume works for a plain path and for a URI checkpoint dir (the
+    deploy form, e.g. s3a://…): both go through the Hadoop FileSystem."""
     pages, _ = corpus
-    ckpt = str(tmp_path_factory.mktemp("ckpt"))
+    local = str(tmp_path_factory.mktemp("ckpt"))
+    ckpt = scheme + local
     r1 = run_pipeline(spark, pages, checkpoint_dir=ckpt)
     first = sorted(r.doc_id for r in r1.survivors.collect())
+    assert os.path.isfile(f"{local}/_PIPELINE_FORMAT")
 
     # simulate a crash after stage 04: delete later stages, resume
     for stage in ["05_simhash_pairs", "07_all_pairs", "08_clusters", "09_survivors"]:
-        shutil.rmtree(f"{ckpt}/{stage}", ignore_errors=True)
+        shutil.rmtree(f"{local}/{stage}")
     r2 = run_pipeline(spark, pages, checkpoint_dir=ckpt)
     resumed = {m["stage"]: m["resumed"] for m in r2.metrics}
     assert resumed["01_filtered"] and resumed["04_minhash_pairs"]
